@@ -2,30 +2,43 @@ package graft.io
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 
-/** The ONE copy of the maintenance discipline every persisted index
-  * family shares (corpus, gram, name, vector, semantic, novelty — six
-  * families before this module each hand-rolled these): staged-swap
-  * rewrites, the single-row generation pointer, tombstone masking, and
-  * the idempotent pre-build reset. Keeping the discipline here means
-  * the crash-safety arguments live (and are unit-tested) once:
+/** The lifecycle of every persisted index family (corpus, gram, name,
+  * vector, semantic, novelty), implemented once over a constant
+  * [[IndexFamily]] descriptor: its tables (suffix, bucket key, bucket
+  * count and [[Role]]), its tombstone id column, its `ingest_batch` tag
+  * and the suffixes one retrain generation owns. A family keeps only
+  * the code that derives its rows and scores them; these operations
+  * drive its tables:
   *
-  *  - [[stagedSwap]]: a rewrite lands under a staging name and the
-  *    public name is re-pointed in ONE metadata statement
-  *    ([[Sinks.repointTable]]) — readers never see an unregistered
-  *    instant, and a mid-rewrite crash leaves the old file set serving.
-  *  - [[flipGenerationPtr]]/[[livePrefix]]: offline-retrained
-  *    generations publish with one single-row pointer flip; a crash
-  *    before the flip leaves the previous generation serving
-  *    bit-identically, a crash after merely leaks droppable staging.
-  *  - [[maskTombstones]]: deletes are LOGICAL (insert-only id sets,
-  *    broadcast anti-joined at read time) until a vacuum's stagedSwap
-  *    folds them in — the append-now/compact-later discipline applied
-  *    to removal.
+  *  - [[write]] / [[append]]: bucketed build writes and batch or
+  *    idempotent micro-batch appends, overlapped per table.
+  *  - [[read]] / [[readLive]]: pointer-resolved views with the tag
+  *    dropped and additive tables folded; the live view masks per-row
+  *    tables with the tombstones.
+  *  - [[purge]] / [[vacuum]]: deletes are LOGICAL (insert-only id sets,
+  *    broadcast anti-joined at read time, [[maskTombstones]]) until a
+  *    vacuum's [[stagedSwap]] folds them in — the append-now /
+  *    compact-later discipline applied to removal.
+  *  - [[stageGeneration]] / [[publishGeneration]]: offline-retrained
+  *    generations publish with one single-row pointer flip
+  *    ([[flipGenerationPtr]] / [[livePrefix]]); a crash before the flip
+  *    leaves the previous generation serving bit-identically, a crash
+  *    after merely leaks droppable staging.
+  *  - [[streamIngest]]: the foreachBatch skeleton every stream into a
+  *    persisted table shares.
   *  - [[resetPrefix]]: gated lifecycle queries run under a fixed
   *    prefix + path and reset first, so repeated invocations (bench
   *    min-of-2, the correctness driver, specs) never accrete catalog
   *    tables, crashed stagings, or index files.
+  *
+  * [[stagedSwap]] is the rewrite primitive under vacuum and the pointer
+  * flip: a rewrite lands under a staging name and the public name is
+  * re-pointed in ONE metadata statement ([[Sinks.repointTable]]) —
+  * readers never see an unregistered instant, and a mid-rewrite crash
+  * leaves the old file set serving. Keeping the discipline here means
+  * the crash-safety arguments live (and are unit-tested) once.
   */
 object IndexLifecycle {
 
@@ -45,19 +58,12 @@ object IndexLifecycle {
     * N is the retrained `<prefix>_rN` family. One single-row read,
     * driver-bounded by construction. */
   def livePrefix(s: SparkSession, prefix: String): String =
-    if (!s.catalog.tableExists(s"${prefix}_ptr")) prefix
-    else {
-      val gen = s.table(s"${prefix}_ptr").collect()(0).getLong(0)
-      if (gen == 0L) prefix else s"${prefix}_r$gen"
-    }
+    generationPrefix(prefix, liveGeneration(s, prefix))
 
   /** The generation number a retrain should stage as: one past the
     * live generation. */
-  def nextGeneration(s: SparkSession, prefix: String): Long = {
-    val cur = livePrefix(s, prefix)
-    if (cur == prefix) 1L
-    else cur.stripPrefix(s"${prefix}_r").toLong + 1L
-  }
+  def nextGeneration(s: SparkSession, prefix: String): Long =
+    liveGeneration(s, prefix) + 1L
 
   /** Flip the `<prefix>_ptr` generation pointer to `gen` in ONE
     * visibility-critical statement (table creation on first flip, a
@@ -116,10 +122,9 @@ object IndexLifecycle {
 
   /** The live generation NUMBER (0 when no pointer exists yet) — the
     * numeric form of [[livePrefix]], for pin/GC arithmetic. */
-  def liveGeneration(s: SparkSession, prefix: String): Long = {
-    val live = livePrefix(s, prefix)
-    if (live == prefix) 0L else live.stripPrefix(s"${prefix}_r").toLong
-  }
+  def liveGeneration(s: SparkSession, prefix: String): Long =
+    if (!s.catalog.tableExists(s"${prefix}_ptr")) 0L
+    else s.table(s"${prefix}_ptr").collect()(0).getLong(0)
 
   /** PIN a generation against retrain-time cleanup: a pinned
     * generation's tables survive the pointer flip and keep serving
@@ -132,18 +137,18 @@ object IndexLifecycle {
     * commute with crashes the way every other append in this engine
     * does, and a replayed pin is harmless. */
   def pinGeneration(s: SparkSession, prefix: String, gen: Long,
-      path: String): Unit =
-    Sinks.appendBucketedTable(
-      s.range(1).select(lit(gen).as("gen"), lit(1L).as("w")),
-      s"${prefix}_pins", "gen", 1, s"$path/pins")
+      path: String): Unit = appendPin(s, prefix, gen, path, 1L)
 
   /** Release a pin — the generation becomes eligible for
     * [[gcGenerations]] (it is NOT dropped here; removal stays an
     * explicit maintenance action). */
   def unpinGeneration(s: SparkSession, prefix: String, gen: Long,
-      path: String): Unit =
+      path: String): Unit = appendPin(s, prefix, gen, path, -1L)
+
+  private def appendPin(s: SparkSession, prefix: String, gen: Long,
+      path: String, w: Long): Unit =
     Sinks.appendBucketedTable(
-      s.range(1).select(lit(gen).as("gen"), lit(-1L).as("w")),
+      s.range(1).select(lit(gen).as("gen"), lit(w).as("w")),
       s"${prefix}_pins", "gen", 1, s"$path/pins")
 
   /** The currently-pinned generation numbers: signed-sum > 0 over the
@@ -156,28 +161,6 @@ object IndexLifecycle {
       .filter(col("w") > 0L)
       .collect().map(_.getLong(0)).toSet
 
-  /** Retrain-publish cleanup, shared by every generational family:
-    * drop the superseded generation's tables unless it is pinned
-    * ([[pinGeneration]]) — a pinned snapshot survives the flip and is
-    * reclaimed only by an explicit [[gcGenerations]] after an unpin. */
-  def retireSupersededUnlessPinned(s: SparkSession, prefix: String,
-      newGen: Long, suffixes: Seq[String]): Unit = {
-    val oldGen = newGen - 1L
-    if (!pinnedGenerations(s, prefix).contains(oldGen)) {
-      val old = generationPrefix(prefix, oldGen)
-      suffixes.foreach(t => s.sql(s"DROP TABLE IF EXISTS ${old}_$t"))
-    }
-  }
-
-  /** Drop every RETIRED generation of `prefix` — registered under
-    * `<generationPrefix>_<suffix>` for each family suffix — that is
-    * neither live nor pinned: catalog entries dropped, their
-    * registered data directories removed. The explicit
-    * storage-reclamation half of the pin contract ([[pinGeneration]]
-    * retains; THIS retires), run as scheduled maintenance like vacuum
-    * and compaction. Generations are discovered from the catalog (not
-    * a caller-tracked list), so crashed-retrain leftovers age out the
-    * same way. Returns the dropped generation numbers. */
   /** The generation numbers physically RETAINED for `prefix` (their
     * `marker`-suffixed table is registered), discovered from the
     * catalog — the ground truth [[gcGenerations]] retires from and an
@@ -193,6 +176,15 @@ object IndexLifecycle {
       }.distinct.sorted
   }
 
+  /** Drop every RETIRED generation of `prefix` — registered under
+    * `<generationPrefix>_<suffix>` for each family suffix — that is
+    * neither live nor pinned: catalog entries dropped, their
+    * registered data directories removed. The explicit
+    * storage-reclamation half of the pin contract ([[pinGeneration]]
+    * retains; THIS retires), run as scheduled maintenance like vacuum
+    * and compaction. Generations are discovered from the catalog (not
+    * a caller-tracked list), so crashed-retrain leftovers age out the
+    * same way. Returns the dropped generation numbers. */
   def gcGenerations(s: SparkSession, prefix: String,
       suffixes: Seq[String]): Seq[Long] = {
     val live = liveGeneration(s, prefix)
@@ -209,6 +201,219 @@ object IndexLifecycle {
         }
       g
     }
+  }
+
+  // ---- Family descriptors and the operations they drive ---------------
+
+  /** How the lifecycle treats one table of a family. */
+  sealed trait Role
+  /** One row per indexed id: masked by the tombstones on read and
+    * rewritten without them by [[vacuum]]. */
+  case object PerRow extends Role
+  /** Signed partial rows of `measure` per `keys`, folded by a keyed sum
+    * on read; the live view keeps the positive sums and [[vacuum]]
+    * rewrites the fold. */
+  final case class Additive(keys: Seq[String], measure: String)
+      extends Role
+  /** Written at build or retrain only; never masked or rewritten. */
+  case object Frozen extends Role
+
+  /** The table `<prefix>_<suffix>`, bucketed on `key` into `buckets`
+    * (`None`: the caller's bucket count). */
+  final case class IndexTable(suffix: String, key: String, role: Role,
+      buckets: Option[Int])
+
+  /** One persisted index family. `idCol` keys its `<prefix>_tombstones`
+    * (`None`: the family has none); `batchTag` is the `ingest_batch`
+    * value a batch-API append carries (`None`: untagged tables — every
+    * non-frozen table of a tagged family carries the tag, -1 on build
+    * and maintenance rewrites, the micro-batch id on stream appends);
+    * `generations` are the suffixes one retrain generation owns. */
+  final case class IndexFamily(tables: Seq[IndexTable],
+      idCol: Option[String], batchTag: Option[Long],
+      generations: Seq[String]) {
+    def table(suffix: String): IndexTable =
+      tables.find(_.suffix == suffix).get
+    /** The tables ingest appends to, registered under `prefix`. */
+    def appended(prefix: String): Seq[String] =
+      tables.filter(_.role != Frozen).map(t => s"${prefix}_${t.suffix}")
+  }
+
+  private val Tag = "ingest_batch"
+
+  private def tagged(fam: IndexFamily, t: IndexTable, df: DataFrame,
+      tag: => Long): DataFrame =
+    if (fam.batchTag.isEmpty || t.role == Frozen) df
+    else df.withColumn(Tag, lit(tag))
+
+  /** Build-time write of `parts` (suffix -> rows) as the tables under
+    * `prefix` at `<path>/<suffix>`, tagged -1, the writes overlapped
+    * (guide §2.6 — callers materialize any cache the parts share
+    * first). */
+  def write(fam: IndexFamily, prefix: String, path: String, buckets: Int,
+      parts: Seq[(String, DataFrame)]): Unit =
+    Sinks.concurrently(parts.map { case (sfx, df) =>
+      val t = fam.table(sfx)
+      () => Sinks.bucketedTable(tagged(fam, t, df, -1L),
+        s"${prefix}_$sfx", t.key, t.buckets.getOrElse(buckets),
+        s"$path/$sfx")
+    })
+
+  /** Append `parts` to the tables under `prefix`. A micro-batch id in
+    * `batchId` makes the append idempotent per table with ONE fused
+    * tag probe ([[Sinks.appendBucketedTablesIdempotent]]); without one
+    * the rows carry the family's batch tag and the appends overlap.
+    * Appends follow each table's registered location; `path` only
+    * seeds a first append (empty: the tables must exist). */
+  def append(s: SparkSession, fam: IndexFamily, prefix: String,
+      path: String, buckets: Int, batchId: Option[Long],
+      parts: Seq[(String, DataFrame)]): Unit = {
+    val targets = parts.map { case (sfx, df) =>
+      val t = fam.table(sfx)
+      (t, df, s"${prefix}_$sfx", t.buckets.getOrElse(buckets),
+        if (path.isEmpty) path else s"$path/$sfx")
+    }
+    batchId match {
+      case Some(id) => Sinks.appendBucketedTablesIdempotent(s, id,
+        targets.map { case (t, df, name, b, loc) => (df, name, t.key, b, loc) })
+      case None => Sinks.concurrently(targets.map {
+        case (t, df, name, b, loc) => () => Sinks.appendBucketedTable(
+          tagged(fam, t, df, fam.batchTag.get), name, t.key, b, loc)
+      })
+    }
+  }
+
+  /** The live generation's tables, by suffix: pointer-resolved, the tag
+    * dropped, additive tables folded. Each table is resolved when
+    * looked up, so a lookup after a write sees it. */
+  def read(s: SparkSession, fam: IndexFamily,
+      prefix: String): String => DataFrame =
+    readAt(s, fam, livePrefix(s, prefix))
+
+  /** [[read]] of the generation registered under `phys`. */
+  def readAt(s: SparkSession, fam: IndexFamily,
+      phys: String): String => DataFrame = sfx => {
+    val df = s.table(s"${phys}_$sfx")
+    fam.table(sfx).role match {
+      case Additive(keys, m) =>
+        df.groupBy(keys.map(col): _*).agg(sum(col(m)).as(m))
+      case PerRow if fam.batchTag.isDefined => df.drop(Tag)
+      case _ => df
+    }
+  }
+
+  /** [[read]] with the tombstones applied: per-row tables masked,
+    * additive tables keep their positive sums. */
+  def readLive(s: SparkSession, fam: IndexFamily,
+      prefix: String): String => DataFrame =
+    readLiveAt(s, fam, prefix, livePrefix(s, prefix))
+
+  /** [[readLive]] of the generation registered under `phys`: the
+    * tombstones stay those of the logical `prefix`. */
+  def readLiveAt(s: SparkSession, fam: IndexFamily, prefix: String,
+      phys: String): String => DataFrame = {
+    val t = readAt(s, fam, phys)
+    sfx => fam.table(sfx).role match {
+      case PerRow => maskTombstones(s, t(sfx), s"${prefix}_tombstones",
+        fam.idCol.get)
+      case Additive(_, m) => t(sfx).filter(col(m) > 0)
+      case Frozen => t(sfx)
+    }
+  }
+
+  /** Tombstone `ids` — insert-only, cost ∝ the takedown batch; reads
+    * mask them at once ([[readLive]]), [[vacuum]] folds them in. */
+  def purge(s: SparkSession, fam: IndexFamily, prefix: String,
+      path: String, ids: DataFrame): Unit = {
+    val id = fam.idCol.get
+    Sinks.appendBucketedTable(ids.select(col(id)),
+      s"${prefix}_tombstones", id, 1, s"$path/tombstones")
+  }
+
+  /** Fold the tombstones into the live generation: every non-frozen
+    * table is rewritten from its live view at `location(suffix)` by a
+    * [[stagedSwap]], the swaps overlapped (distinct tables, each its
+    * own atomic re-point), then the tombstones are dropped. A crash
+    * mid-vacuum leaves every not-yet-swapped table intact with the mask
+    * still in force; the mask re-applied over an already-swapped table
+    * is an idempotent no-op. A crash between the re-points and the drop
+    * leaves tombstones masking ids that no longer exist — harmless
+    * until the next maintenance run drops them. An additive table is
+    * rewritten as its fold: one row per key, positive sums only. Runs
+    * with ingest quiesced: the rewrite re-tags -1. */
+  def vacuum(s: SparkSession, fam: IndexFamily, prefix: String,
+      buckets: Int, location: String => String): Unit = {
+    val phys = livePrefix(s, prefix)
+    val live = readLiveAt(s, fam, prefix, phys)
+    val rows = fam.tables.filter(_.role != Frozen)
+      .map(t => (t, tagged(fam, t, live(t.suffix), -1L)))
+    Sinks.concurrently(rows.map { case (t, df) => () =>
+      stagedSwap(s, s"${phys}_${t.suffix}", df, t.key,
+        t.buckets.getOrElse(buckets), location(t.suffix))
+    })
+    if (fam.idCol.isDefined)
+      s.sql(s"DROP TABLE IF EXISTS ${prefix}_tombstones")
+  }
+
+  /** Stage the next generation: drop a crashed run's leftovers under
+    * its `<prefix>_r<gen>` names and return `gen`; the caller writes the
+    * generation's tables there, then [[publishGeneration]]s it. */
+  def stageGeneration(s: SparkSession, fam: IndexFamily,
+      prefix: String): Long = {
+    val gen = nextGeneration(s, prefix)
+    fam.generations.foreach(t =>
+      s.sql(s"DROP TABLE IF EXISTS ${generationPrefix(prefix, gen)}_$t"))
+    gen
+  }
+
+  /** Publish a staged generation: flip the pointer (its row lands
+    * under `ptrPath`), drop the superseded generation's tables unless
+    * it is pinned ([[pinGeneration]] — a pinned snapshot survives the
+    * flip and is reclaimed only by an explicit [[gcGenerations]] after
+    * an unpin), and drop the tombstones the staged survivors already
+    * fold in. */
+  def publishGeneration(s: SparkSession, fam: IndexFamily,
+      prefix: String, gen: Long, ptrPath: String): Unit = {
+    flipGenerationPtr(s, prefix, gen, ptrPath)
+    if (!pinnedGenerations(s, prefix).contains(gen - 1L))
+      fam.generations.foreach(t => s.sql(
+        s"DROP TABLE IF EXISTS ${generationPrefix(prefix, gen - 1L)}_$t"))
+    s.sql(s"DROP TABLE IF EXISTS ${prefix}_tombstones")
+  }
+
+  /** The physical prefix of retained generation `gen`, which must be
+    * live or pinned before the retrain that superseded it. */
+  def retainedPrefix(s: SparkSession, fam: IndexFamily, prefix: String,
+      gen: Long): String = {
+    val phys = generationPrefix(prefix, gen)
+    require(s.catalog.tableExists(s"${phys}_${fam.generations.last}"),
+      s"generation $gen of index '$prefix' is not retained — " +
+        "pin it before the retrain that supersedes it")
+    phys
+  }
+
+  /** Stream `rows` into persisted tables: each non-empty micro-batch
+    * runs `ingest(batch, batchId)` (whose appends key on the id, so
+    * at-least-once replays stay exactly-once), then refreshes `tables`
+    * in the serving session — a micro-batch writes through a CLONED
+    * session, which invalidates only its own relation cache. Blocks
+    * until all currently available input is processed; the caller
+    * stops (or keeps) the query. */
+  def streamIngest(s: SparkSession, rows: DataFrame, checkpointDir: String,
+      tables: Seq[String])(ingest: (DataFrame, Long) => Unit)
+      : StreamingQuery = {
+    val q = rows.writeStream
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        if (!batch.isEmpty) {
+          ingest(batch, batchId)
+          tables.filter(t => s.catalog.tableExists(t))
+            .foreach(t => s.catalog.refreshTable(t))
+        }
+      }
+      .option("checkpointLocation", checkpointDir)
+      .start()
+    q.processAllAvailable()
+    q
   }
 
   /** Idempotent pre-build reset for a persisted index prefix: drop

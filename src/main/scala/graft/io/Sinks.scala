@@ -227,22 +227,9 @@ object Sinks {
   def appendBucketedTableIdempotent(
       spark: org.apache.spark.sql.SparkSession, df: DataFrame,
       batchId: Long, tableName: String, key: String, buckets: Int,
-      path: String): Boolean = {
-    val clean = !spark.catalog.tableExists(tableName) || {
-      // re-list before probing: the crashed attempt's append may have
-      // committed through a DIFFERENT session clone, whose write only
-      // invalidated its own relation cache — a stale file listing here
-      // would miss the committed tag and double-append
-      spark.catalog.refreshTable(tableName)
-      // tier-1 probe: one early-exiting LIMIT-1 stage — the whole cost
-      // of the common first-attempt path (the per-file job below only
-      // runs when a replay actually found the tag)
-      spark.table(tableName)
-        .filter(col("ingest_batch") === batchId).isEmpty
-    }
-    finishIdempotentAppend(spark, df, batchId, tableName, key, buckets,
-      path, clean)
-  }
+      path: String): Boolean =
+    appendBucketedTablesIdempotent(spark, batchId,
+      Seq((df, tableName, key, buckets, path))).head
 
   /** The shared tail of the idempotent append, after the tier-1 probe
     * decided `clean`: a clean table appends the tagged batch; a table
@@ -295,26 +282,45 @@ object Sinks {
     * torn-batch recovery argument (any committed-subset of tables
     * replays to exactly-once contents) is untouched because the probe
     * is read-only. Same single-writer/quiesced-maintenance contract as
-    * [[appendBucketedTableIdempotent]]. */
+    * [[appendBucketedTableIdempotent]]. Precondition, enforced: the
+    * parts name distinct tables. Returns, per part, whether its rows
+    * were appended (false: the complete batch was already there). */
   def appendBucketedTablesIdempotent(
       spark: org.apache.spark.sql.SparkSession, batchId: Long,
-      parts: Seq[(DataFrame, String, String, Int, String)]): Unit = {
+      parts: Seq[(DataFrame, String, String, Int, String)]): Seq[Boolean] = {
+    // two parts naming one table would land two frames under one tag,
+    // which a replay's per-table count compare can never match
+    require(parts.map(_._2).distinct.size == parts.size,
+      s"duplicate table in one idempotent append: ${parts.map(_._2)}")
     val existing = parts.map(_._2).filter(spark.catalog.tableExists)
-    // the q219 cloned-session lesson, batched: refresh before probing
+    // re-list before probing: the crashed attempt's append may have
+    // committed through a DIFFERENT session clone, whose write only
+    // invalidated its own relation cache — a stale file listing here
+    // would miss the committed tag and double-append
     existing.foreach(spark.catalog.refreshTable)
-    val taggedTables: Set[String] =
-      if (existing.isEmpty) Set.empty
-      else existing.map { t =>
-        spark.table(t).filter(col("ingest_batch") === batchId)
-          .select(lit(t).as("t")).limit(1)
-      }.reduce(_ unionAll _).collect().map(_.getString(0)).toSet
-    concurrently(parts.map { case (df, t, key, buckets, path) =>
-      () => {
-        finishIdempotentAppend(spark, df, batchId, t, key, buckets,
-          path, clean = !taggedTables.contains(t))
-        ()
-      }
+    // tier-1 probe: one early-exiting LIMIT-1 stage per table, fused —
+    // the whole cost of the common first-attempt path (the per-file
+    // job of finishIdempotentAppend only runs when a replay actually
+    // found the tag)
+    def tagged(t: String) =
+      spark.table(t).filter(col("ingest_batch") === batchId)
+    val taggedTables: Set[String] = existing match {
+      case Seq() => Set.empty
+      // a lone table's isEmpty runs its LIMIT 1 as ONE job over every
+      // file; a collected LIMIT 1 grows its scan job by job instead
+      case Seq(t) => if (tagged(t).isEmpty) Set.empty else Set(t)
+      case ts => ts.map(t => tagged(t).select(lit(t).as("t")).limit(1))
+        .reduce(_ unionAll _).collect().map(_.getString(0)).toSet
+    }
+    // each action writes its own slot; concurrently's Future.get
+    // publishes the writes to this thread
+    val applied = new Array[Boolean](parts.size)
+    concurrently(parts.zipWithIndex.map {
+      case ((df, t, key, buckets, path), i) => () =>
+        applied(i) = finishIdempotentAppend(spark, df, batchId, t, key,
+          buckets, path, clean = !taggedTables.contains(t))
     })
+    applied.toSeq
   }
 
   /** Compact an append-accumulated [[bucketedTable]] back to one file
@@ -340,18 +346,13 @@ object Sinks {
   def compactBucketedTable(spark: org.apache.spark.sql.SparkSession,
       tableName: String, key: String, buckets: Int,
       oldPath: String, newPath: String): Unit = {
-    val staging = tableName + "__compacting"
-    spark.sql(s"DROP TABLE IF EXISTS $staging") // leftover crashed run
-    // repartition(buckets, key) and bucketBy share the same
-    // murmur3-pmod placement, so each write task holds exactly ONE
-    // bucket and emits exactly one file — without it every task
-    // re-fragments into a file per bucket it touches and the
-    // "compaction" multiplies files instead
-    bucketedTable(
-      spark.read.parquet(oldPath)
-        .repartition(buckets, org.apache.spark.sql.functions.col(key)),
-      staging, key, buckets, newPath)
-    repointTable(spark, tableName, staging, newPath)
+    // stagedSwap repartitions on `key`: repartition(buckets, key) and
+    // bucketBy share the same murmur3-pmod placement, so each write
+    // task holds exactly ONE bucket and emits exactly one file —
+    // without it every task re-fragments into a file per bucket it
+    // touches and the "compaction" multiplies files instead
+    IndexLifecycle.stagedSwap(spark, tableName, spark.read.parquet(oldPath),
+      key, buckets, newPath, stagingSuffix = "__compacting")
   }
 
   /** Atomically re-point the PUBLIC `tableName` at the compacted file
@@ -446,18 +447,14 @@ object Sinks {
   def compactRollup(spark: org.apache.spark.sql.SparkSession,
       tableName: String, keys: Seq[String], measures: Seq[String],
       buckets: Int, newPath: String): Unit = {
-    val staging = tableName + "__compacting"
-    spark.sql(s"DROP TABLE IF EXISTS $staging")
-    bucketedTable(
+    IndexLifecycle.stagedSwap(spark, tableName,
       readRollup(spark, tableName, keys, measures)
         // folding erases per-batch ingest tags (-1 = "maintenance
         // write") — see appendBucketedTableIdempotent's contract: only
         // compact while the feeding stream is stopped at a committed
         // offset, or a replayed batch would no longer see its tag
-        .withColumn("ingest_batch", lit(-1L))
-        .repartition(buckets, org.apache.spark.sql.functions.col(keys.head)),
-      staging, keys.head, buckets, newPath)
-    repointTable(spark, tableName, staging, newPath)
+        .withColumn("ingest_batch", lit(-1L)),
+      keys.head, buckets, newPath, stagingSuffix = "__compacting")
   }
 
   /** [[archiveShards]] outcome. `Refused` means nothing was touched;

@@ -2,6 +2,9 @@ package graft.ops
 
 import graft.{OpSpec, Tables}
 import graft.Tables._
+import graft.io.IndexLifecycle
+import graft.io.IndexLifecycle.{Additive, Frozen, IndexFamily, IndexTable,
+  PerRow}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -803,56 +806,56 @@ object DedupOps {
     CorpusIndex(hashes, shingles, bands, sizes, bandCounts)
   }
 
-  /** Persist a [[CorpusIndex]] as bucketed+sorted tables
-    * ([[graft.io.Sinks.bucketedTable]]) named `<prefix>_hashes` /
-    * `_shingles` / `_bands` / `_sizes` under `path`. Each table buckets
-    * on the key its ingest-side join probes with, so the corpus side of
-    * every join is pre-shuffled on disk. */
-  def writeCorpusIndex(idx: CorpusIndex, prefix: String, path: String,
-      buckets: Int = 32): Unit = {
-    // every physical table carries the ingest_batch maintenance tag
-    // (-1 = batch build); idempotent streaming appends key on it and
-    // readCorpusIndex drops it on open
-    def tagged(df: DataFrame) = df.withColumn("ingest_batch", lit(-1L))
-    // one corpus-text pass for all five writes: shingles/bands cached
-    // and MATERIALIZED first (four of the five tables re-derive from
-    // them — unpersisted, each write re-ran the scan+shingle+minhash
-    // lineage), then the independent table writes overlap (guide §2.6;
-    // CacheManager matches the cached subtrees inside the derived
-    // sizes/bandCounts plans)
+  /** The persisted [[CorpusIndex]] family: four per-doc tables and the
+    * additive band-count partials, each bucketed on the key its
+    * ingest-side join probes with, all carrying the `ingest_batch` tag
+    * (-1 = batch build), tombstoned by doc_id. */
+  private[graft] val CorpusFamily = IndexFamily(Seq(
+      IndexTable("hashes", "h", PerRow, None),
+      IndexTable("shingles", "doc_id", PerRow, None),
+      IndexTable("bands", "band_val", PerRow, None),
+      IndexTable("sizes", "doc_id", PerRow, None),
+      IndexTable("bandcounts", "band_val",
+        Additive(Seq("band_idx", "band_val"), "ccnt"), None)),
+    idCol = Some("doc_id"), batchTag = Some(-1L), generations = Nil)
+
+  private def corpusOf(t: String => DataFrame): CorpusIndex = CorpusIndex(
+    t("hashes"), t("shingles"), t("bands"), t("sizes"), t("bandcounts"))
+
+  /** Hand the five tables of `idx` to `store` with ONE corpus-text
+    * pass: shingles/bands cached and MATERIALIZED first (four of the
+    * five tables re-derive from them — unpersisted, each write re-ran
+    * the scan+shingle+minhash lineage; CacheManager matches the cached
+    * subtrees inside the derived sizes/bandCounts plans), so the five
+    * independent writes overlap over warm caches (guide §2.6). */
+  private def storeCorpus(idx: CorpusIndex)(
+      store: Seq[(String, DataFrame)] => Unit): Unit = {
     val sh = idx.shingles.persist()
     val bd = idx.bands.persist()
     try {
       bd.count() // computes shingles then bands — both caches warm
-      graft.io.Sinks.concurrently(Seq(
-        () => graft.io.Sinks.bucketedTable(tagged(idx.hashes),
-          s"${prefix}_hashes", "h", buckets, s"$path/hashes"),
-        () => graft.io.Sinks.bucketedTable(tagged(idx.shingles),
-          s"${prefix}_shingles", "doc_id", buckets, s"$path/shingles"),
-        () => graft.io.Sinks.bucketedTable(tagged(idx.bands),
-          s"${prefix}_bands", "band_val", buckets, s"$path/bands"),
-        () => graft.io.Sinks.bucketedTable(tagged(idx.sizes),
-          s"${prefix}_sizes", "doc_id", buckets, s"$path/sizes"),
-        () => graft.io.Sinks.bucketedTable(tagged(idx.bandCounts),
-          s"${prefix}_bandcounts", "band_val", buckets,
-          s"$path/bandcounts")))
+      store(Seq("hashes" -> idx.hashes, "shingles" -> idx.shingles,
+        "bands" -> idx.bands, "sizes" -> idx.sizes,
+        "bandcounts" -> idx.bandCounts))
     } finally { bd.unpersist(); sh.unpersist() }
   }
 
+  /** Persist a [[CorpusIndex]] as the [[CorpusFamily]] tables
+    * `<prefix>_hashes` / `_shingles` / `_bands` / `_sizes` /
+    * `_bandcounts` under `path`, so the corpus side of every ingest
+    * join is pre-shuffled on disk. */
+  def writeCorpusIndex(idx: CorpusIndex, prefix: String, path: String,
+      buckets: Int = 32): Unit =
+    storeCorpus(idx)(IndexLifecycle.write(CorpusFamily, prefix, path,
+      buckets, _))
+
   /** Re-open a persisted [[CorpusIndex]] by table-name prefix.
-    * `bandCounts` is normalized through a keyed sum because
+    * `bandCounts` is folded through a keyed sum because
     * [[appendToCorpusIndex]] adds PARTIAL count rows per ingest batch
     * (pure inserts — never a corpus-sized rewrite); for a never-
     * appended index the sum is the identity. */
   def readCorpusIndex(s: SparkSession, prefix: String): CorpusIndex =
-    CorpusIndex(
-      s.table(s"${prefix}_hashes").drop("ingest_batch"),
-      s.table(s"${prefix}_shingles").drop("ingest_batch"),
-      s.table(s"${prefix}_bands").drop("ingest_batch"),
-      s.table(s"${prefix}_sizes").drop("ingest_batch"),
-      s.table(s"${prefix}_bandcounts")
-        .groupBy(col("band_idx"), col("band_val"))
-        .agg(sum(col("ccnt")).as("ccnt")))
+    corpusOf(IndexLifecycle.read(s, CorpusFamily, prefix))
 
   /** Fold an ACCEPTED ingest batch into a persisted [[CorpusIndex]]
     * without rebuilding it — the maintenance half of the q55 story
@@ -864,66 +867,26 @@ object DedupOps {
     * CorpusIndex is per-doc (hashes/shingles/bands/sizes) or
     * additively mergeable (bandCounts), so an append is INSERT-only:
     * the batch's artifacts — derived from batch text alone — are
-    * appended to the bucketed tables ([[graft.io.Sinks
-    * .appendBucketedTable]]); bandCounts gains partial rows that
-    * [[readCorpusIndex]] sums at open. Cost scales with the batch,
+    * appended to the bucketed tables; bandCounts gains partial rows
+    * that [[readCorpusIndex]] sums at open. Cost scales with the batch,
     * never the corpus, and prior corpus text is never re-scanned
     * (plan-audited in the spec). The invariant spec proves
     * build(all) == build(part) + append(rest) table-for-table.
     *
     * A streaming caller passes its micro-batch id in `batchId`: each
     * of the five table appends then commits the id atomically with its
-    * rows and skips on replay
-    * ([[graft.io.Sinks.appendBucketedTableIdempotent]]). The check is
+    * rows and skips on replay, with ONE fused tag probe for all five
+    * ([[graft.io.Sinks.appendBucketedTablesIdempotent]]). The check is
     * PER TABLE on purpose — a crash partway through the five appends
     * leaves a torn batch (some tables written, some not), and the
     * replay must fill exactly the missing tables without re-appending
-    * the committed ones. */
+    * the committed ones; ordering among the five was never
+    * load-bearing, so they overlap. */
   def appendToCorpusIndex(newDocs: DataFrame, prefix: String,
       path: String, buckets: Int = 32,
-      batchId: Option[Long] = None): Unit = {
-    val shingles = hashedShingles(newDocs).persist()
-    val bands = bandRows(shingles).persist()
-    val fresh = CorpusIndex(
-      newDocs.select(col("doc_id"), md5(col("text").cast("binary")).as("h")),
-      shingles, bands,
-      shingles.groupBy(col("doc_id")).agg(count(lit(1)).as("sz")),
-      bands.groupBy(col("band_idx"), col("band_val"))
-        .agg(count(lit(1)).as("ccnt")))
-    val five = Seq(
-      (fresh.hashes, "hashes", "h"),
-      (fresh.shingles, "shingles", "doc_id"),
-      (fresh.bands, "bands", "band_val"),
-      (fresh.sizes, "sizes", "doc_id"),
-      (fresh.bandCounts, "bandcounts", "band_val"))
-    try {
-      // materialize the shared caches once (bands computes shingles
-      // too), then overlap the five independent per-table appends
-      // (guide §2.6). The torn-batch replay contract is unchanged:
-      // each append stays atomic per table, and the doc comment above
-      // already argues recovery from ANY committed-subset — ordering
-      // among the five was never load-bearing.
-      bands.count()
-      batchId match {
-        case Some(id) =>
-          // ONE fused tier-1 tag probe for all five tables per
-          // micro-batch instead of five LIMIT-1 jobs (guide §1 —
-          // per-job driver latency dominated the streaming ingest)
-          graft.io.Sinks.appendBucketedTablesIdempotent(
-            newDocs.sparkSession, id,
-            five.map { case (df, suffix, key) =>
-              (df, s"${prefix}_$suffix", key, buckets, s"$path/$suffix")
-            })
-        case None =>
-          graft.io.Sinks.concurrently(five.map {
-            case (df, suffix, key) => () =>
-              graft.io.Sinks.appendBucketedTable(
-                df.withColumn("ingest_batch", lit(-1L)),
-                s"${prefix}_$suffix", key, buckets, s"$path/$suffix")
-          })
-      }
-    } finally { bands.unpersist(); shingles.unpersist() }
-  }
+      batchId: Option[Long] = None): Unit =
+    storeCorpus(buildCorpusIndex(newDocs))(IndexLifecycle.append(
+      newDocs.sparkSession, CorpusFamily, prefix, path, buckets, batchId, _))
 
   /** Carve a takedown set out of a [[CorpusIndex]] — the
     * right-to-be-forgotten half of index maintenance (opt-outs, DMCA
@@ -988,15 +951,13 @@ object DedupOps {
       // materializing the (takedown-batch-sized) cache first keeps the
       // negatives below derived from exactly this call's ids
       d.count()
-      graft.io.Sinks.appendBucketedTable(d, tomb, "doc_id", 1,
-        s"$path/tombstones")
+      IndexLifecycle.purge(s, CorpusFamily, prefix, path, d)
       val neg = s.table(s"${prefix}_bands")
         .join(broadcast(d), Seq("doc_id"), "left_semi")
         .groupBy(col("band_idx"), col("band_val"))
         .agg((-count(lit(1))).as("ccnt"))
-        .withColumn("ingest_batch", lit(-1L))
-      graft.io.Sinks.appendBucketedTable(neg, s"${prefix}_bandcounts",
-        "band_val", buckets, s"$path/bandcounts")
+      IndexLifecycle.append(s, CorpusFamily, prefix, path, buckets, None,
+        Seq("bandcounts" -> neg))
     } finally d.unpersist()
   }
 
@@ -1004,46 +965,18 @@ object DedupOps {
     * needs no mask — the negative partials are already folded in by
     * [[readCorpusIndex]]'s open-time sum (zeroed buckets are dropped
     * to match what a scratch build would contain). */
-  def readCorpusIndexLive(s: SparkSession, prefix: String): CorpusIndex = {
-    val idx = readCorpusIndex(s, prefix)
-    def mask(df: DataFrame) = graft.io.IndexLifecycle.maskTombstones(
-      s, df, s"${prefix}_tombstones", "doc_id")
-    CorpusIndex(mask(idx.hashes), mask(idx.shingles), mask(idx.bands),
-      mask(idx.sizes), idx.bandCounts.filter(col("ccnt") > 0))
-  }
+  def readCorpusIndexLive(s: SparkSession, prefix: String): CorpusIndex =
+    corpusOf(IndexLifecycle.readLive(s, CorpusFamily, prefix))
 
-  /** Fold tombstones into the physical tables: each table is staged
-    * at `newPath` and re-pointed only after its write commits, through
-    * [[graft.io.Sinks.repointTable]]'s SINGLE-STATEMENT location swap
-    * — a mid-vacuum crash leaves every not-yet-swapped table intact
-    * (and readable: no table name is ever unregistered, even
-    * mid-swap) and the tombstone mask still in force; a crash BETWEEN
-    * per-table swaps leaves a mixed index whose already-swapped
-    * tables are exactly their masked contents, so the still-standing
-    * mask re-applied over them is an idempotent no-op. Then the
-    * tombstone set is dropped. The spec proves vacuum ==
+  /** Fold tombstones into the physical tables — each of the five is
+    * rewritten from its live view at `<newPath>/<suffix>` and
+    * re-pointed in one statement ([[graft.io.IndexLifecycle.vacuum]]),
+    * then the tombstone set is dropped. The spec proves vacuum ==
     * build-from-survivors table-for-table. */
   def vacuumCorpusIndex(s: SparkSession, prefix: String,
-      newPath: String, buckets: Int = 32): Unit = {
-    val live = readCorpusIndexLive(s, prefix)
-    // the live view drops the physical ingest_batch tag; rewrite
-    // with the maintenance tag so later tagged appends still match
-    def swap(df: DataFrame, suffix: String, key: String): Unit =
-      graft.io.IndexLifecycle.stagedSwap(s, s"${prefix}_$suffix",
-        df.withColumn("ingest_batch", lit(-1L)), key, buckets,
-        s"$newPath/$suffix")
-    // the five swaps are independent (distinct tables, each its own
-    // atomic re-point; a crash leaves any not-yet-swapped table masked
-    // by the still-registered tombstones — the contract never ordered
-    // them); overlap the rewrites (guide §2.6)
-    graft.io.Sinks.concurrently(Seq(
-      () => swap(live.hashes, "hashes", "h"),
-      () => swap(live.shingles, "shingles", "doc_id"),
-      () => swap(live.bands, "bands", "band_val"),
-      () => swap(live.sizes, "sizes", "doc_id"),
-      () => swap(live.bandCounts, "bandcounts", "band_val")))
-    s.sql(s"DROP TABLE IF EXISTS ${prefix}_tombstones")
-  }
+      newPath: String, buckets: Int = 32): Unit =
+    IndexLifecycle.vacuum(s, CorpusFamily, prefix, buckets,
+      sfx => s"$newPath/$sfx")
 
   /** Incremental ingest dedup of a NEW batch against an existing corpus
     * index: every join is BIPARTITE (new×corpus), so the corpus is
@@ -1057,17 +990,12 @@ object DedupOps {
     *    confirms >= 1/4 (integer arithmetic, 4·inter >= union);
     *  - `keep`: novel content. */
   def incrementalDedup(newDocs: DataFrame, corpus: CorpusIndex): DataFrame = {
-    val shingles = hashedShingles(newDocs).persist()
+    val fresh = buildCorpusIndex(newDocs)
     // persisted: the K-min signature aggregate behind bandRows is the
     // batch's dominant cost and is referenced by both the cap and the
     // candidate join — unpersisted it would re-run per reference
-    val bands = bandRows(shingles).persist()
-    val fresh = CorpusIndex(
-      newDocs.select(col("doc_id"), md5(col("text").cast("binary")).as("h")),
-      shingles, bands,
-      shingles.groupBy(col("doc_id")).agg(count(lit(1)).as("sz")),
-      bands.groupBy(col("band_idx"), col("band_val"))
-        .agg(count(lit(1)).as("ccnt")))
+    fresh.shingles.persist()
+    fresh.bands.persist()
     incrementalDedupFrom(newDocs.select(col("doc_id")), fresh, corpus)
   }
 
@@ -1861,6 +1789,12 @@ object DedupOps {
   private def containPrefix(ranked: DataFrame): DataFrame =
     ranked.filter(lit(3) * col("sz") <= lit(4) * (col("sz") - col("rn") + 1))
 
+  /** (doc_id, arr, sz): each doc's sorted gram array and its size. */
+  private def docGramsOf(grams: DataFrame): DataFrame =
+    grams.groupBy(col("doc_id"))
+      .agg(sort_array(collect_list(col("g"))).as("arr"),
+        count(lit(1)).as("sz"))
+
   /** One corpus-text pass → [[GramIndex]]. Shared intermediates are
     * persist()ed (released by [[writeGramIndex]]) so the pass is ONE
     * even though the index lands as four separate table writes. */
@@ -1869,16 +1803,25 @@ object DedupOps {
     val gramDf = grams.groupBy(col("g")).agg(count(lit(1)).as("df"))
       .persist()
     val ranked = rankGrams(grams, gramDf).persist()
-    val docGrams = grams.groupBy(col("doc_id"))
-      .agg(sort_array(collect_list(col("g"))).as("arr"),
-        count(lit(1)).as("sz"))
-    GramIndex(ranked, containPrefix(ranked), docGrams, gramDf,
+    GramIndex(ranked, containPrefix(ranked), docGramsOf(grams), gramDf,
       cached = Seq(grams, gramDf, ranked))
   }
 
-  /** Persist a [[GramIndex]] as bucketed tables, each on its
-    * ingest-side probe key (`g` for the two candidate-join tables,
-    * `doc_id` for the verify arrays). */
+  /** The persisted [[GramIndex]] family: three per-doc tables and the
+    * frozen df order, untagged, tombstoned by doc_id; each table
+    * buckets on its ingest-side probe key (`g` for the two
+    * candidate-join tables, `doc_id` for the verify arrays). */
+  private[graft] val GramFamily = IndexFamily(Seq(
+      IndexTable("ranked", "g", PerRow, None),
+      IndexTable("prefixes", "g", PerRow, None),
+      IndexTable("docgrams", "doc_id", PerRow, None),
+      IndexTable("gramdf", "g", Frozen, None)),
+    idCol = Some("doc_id"), batchTag = None, generations = Nil)
+
+  private def gramOf(t: String => DataFrame): GramIndex =
+    GramIndex(t("ranked"), t("prefixes"), t("docgrams"), t("gramdf"))
+
+  /** Persist a [[GramIndex]] as the [[GramFamily]] tables. */
   def writeGramIndex(idx: GramIndex, prefix: String, path: String,
       buckets: Int = 32): Unit =
     try {
@@ -1886,20 +1829,15 @@ object DedupOps {
       // ranked); write it alone so the caches materialize exactly
       // once, then overlap the three remaining independent writes
       // (guide §2.6 — they read only warm cached frames)
-      graft.io.Sinks.bucketedTable(idx.ranked, s"${prefix}_ranked", "g",
-        buckets, s"$path/ranked")
-      graft.io.Sinks.concurrently(Seq(
-        () => graft.io.Sinks.bucketedTable(idx.prefixes,
-          s"${prefix}_prefixes", "g", buckets, s"$path/prefixes"),
-        () => graft.io.Sinks.bucketedTable(idx.docGrams,
-          s"${prefix}_docgrams", "doc_id", buckets, s"$path/docgrams"),
-        () => graft.io.Sinks.bucketedTable(idx.gramDf,
-          s"${prefix}_gramdf", "g", buckets, s"$path/gramdf")))
+      IndexLifecycle.write(GramFamily, prefix, path, buckets,
+        Seq("ranked" -> idx.ranked))
+      IndexLifecycle.write(GramFamily, prefix, path, buckets,
+        Seq("prefixes" -> idx.prefixes, "docgrams" -> idx.docGrams,
+          "gramdf" -> idx.gramDf))
     } finally idx.cached.foreach(_.unpersist())
 
   def readGramIndex(s: SparkSession, prefix: String): GramIndex =
-    GramIndex(s.table(s"${prefix}_ranked"), s.table(s"${prefix}_prefixes"),
-      s.table(s"${prefix}_docgrams"), s.table(s"${prefix}_gramdf"))
+    gramOf(IndexLifecycle.read(s, GramFamily, prefix))
 
   /** Tombstone a takedown batch of doc_ids out of a persisted
     * [[GramIndex]] — the right-to-be-forgotten path the containment
@@ -1911,27 +1849,21 @@ object DedupOps {
     * consistent total order, not true document frequency), so a purged
     * doc's df contribution staying in the frozen order affects only
     * candidate volume, never results). Insert-only, cost ∝ takedown
-    * batch; per-doc rows stay on disk until a periodic rebuild and
+    * batch; per-doc rows stay on disk until [[vacuumGramIndex]] and
     * [[readGramIndexLive]] masks them meanwhile. Idempotent: re-purging
     * an id appends a duplicate tombstone row, and the mask is a
     * semi-membership test, so retries are harmless. */
   def purgeGramIndex(s: SparkSession, dead: DataFrame, prefix: String,
       path: String): Unit =
-    graft.io.Sinks.appendBucketedTable(
-      dead.select(col("doc_id")).distinct(), s"${prefix}_tombstones",
-      "doc_id", 1, s"$path/tombstones")
+    IndexLifecycle.purge(s, GramFamily, prefix, path,
+      dead.select(col("doc_id")).distinct())
 
   /** Open a persisted [[GramIndex]] with tombstones applied: every
     * per-doc table anti-joined against the (small, broadcast) takedown
     * set — a purged doc stops matching IMMEDIATELY, as a candidate, a
     * prefix probe, or a verify array. */
-  def readGramIndexLive(s: SparkSession, prefix: String): GramIndex = {
-    val idx = readGramIndex(s, prefix)
-    def mask(df: DataFrame) = graft.io.IndexLifecycle.maskTombstones(
-      s, df, s"${prefix}_tombstones", "doc_id")
-    GramIndex(mask(idx.ranked), mask(idx.prefixes), mask(idx.docGrams),
-      idx.gramDf)
-  }
+  def readGramIndexLive(s: SparkSession, prefix: String): GramIndex =
+    gramOf(IndexLifecycle.readLive(s, GramFamily, prefix))
 
   /** Fold an accepted batch into a persisted [[GramIndex]] without
     * rebuilding. The batch's grams are ranked by the index's FROZEN
@@ -1954,19 +1886,14 @@ object DedupOps {
       prefix: String, path: String, buckets: Int = 32): Unit = {
     val grams = hashedGramRows(newDocs).persist()
     val ranked = rankGrams(grams, s.table(s"${prefix}_gramdf")).persist()
+    def append(parts: (String, DataFrame)*): Unit = IndexLifecycle.append(
+      s, GramFamily, prefix, path, buckets, None, parts)
     try {
-      val docGrams = grams.groupBy(col("doc_id"))
-        .agg(sort_array(collect_list(col("g"))).as("arr"),
-          count(lit(1)).as("sz"))
       // first append materializes both caches; the remaining two
       // independent appends overlap (guide §2.6)
-      graft.io.Sinks.appendBucketedTable(ranked, s"${prefix}_ranked",
-        "g", buckets, s"$path/ranked")
-      graft.io.Sinks.concurrently(Seq(
-        () => graft.io.Sinks.appendBucketedTable(containPrefix(ranked),
-          s"${prefix}_prefixes", "g", buckets, s"$path/prefixes"),
-        () => graft.io.Sinks.appendBucketedTable(docGrams,
-          s"${prefix}_docgrams", "doc_id", buckets, s"$path/docgrams")))
+      append("ranked" -> ranked)
+      append("prefixes" -> containPrefix(ranked),
+        "docgrams" -> docGramsOf(grams))
     } finally { ranked.unpersist(); grams.unpersist() }
   }
 
@@ -1984,9 +1911,7 @@ object DedupOps {
       : DataFrame = {
     val grams = hashedGramRows(newDocs).persist()
     val ranked = rankGrams(grams, corpus.gramDf).persist()
-    val docGrams = grams.groupBy(col("doc_id"))
-      .agg(sort_array(collect_list(col("g"))).as("arr"),
-        count(lit(1)).as("sz"))
+    val docGrams = docGramsOf(grams)
     def candidates(a: DataFrame, b: DataFrame, strict: Boolean) = {
       val sizeRule =
         if (strict) col("a.sz") < col("b.sz")
@@ -2055,6 +1980,11 @@ object DedupOps {
         """array_distinct(transform(sequence(1, length(p_name)),
            i -> substring(p_name, i, 1)))""")).as("ch"))
 
+  /** (p_name, ln) of the names within [[EditCap]] characters. */
+  private def tinyNames(names: DataFrame): DataFrame =
+    names.select(col("p_name"), length(col("p_name")).as("ln"))
+      .filter(col("ln") <= EditCap)
+
   private def namePrefixes(grams: DataFrame, df: DataFrame): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("p_name")).orderBy(col("df").asc, col("bg").asc)
@@ -2073,10 +2003,21 @@ object DedupOps {
     val df = grams.groupBy(col("bg")).agg(count(lit(1)).as("df"))
       .persist()
     NameIndex(grams, namePrefixes(grams, df), nameCharRows(names),
-      names.select(col("p_name"), length(col("p_name")).as("ln"))
-        .filter(col("ln") <= EditCap),
-      df, cached = Seq(grams, df))
+      tinyNames(names), df, cached = Seq(grams, df))
   }
+
+  /** The persisted [[NameIndex]] family: four per-name tables and the
+    * frozen bigram df order, untagged, tombstoned by p_name. */
+  private[graft] val NameFamily = IndexFamily(Seq(
+      IndexTable("grams", "bg", PerRow, None),
+      IndexTable("prefixes", "bg", PerRow, None),
+      IndexTable("chars", "ch", PerRow, None),
+      IndexTable("tiny", "ln", PerRow, None),
+      IndexTable("bigramdf", "bg", Frozen, None)),
+    idCol = Some("p_name"), batchTag = None, generations = Nil)
+
+  private def nameOf(t: String => DataFrame): NameIndex = NameIndex(
+    t("grams"), t("prefixes"), t("chars"), t("tiny"), t("bigramdf"))
 
   def writeNameIndex(idx: NameIndex, prefix: String, path: String,
       buckets: Int = 32): Unit =
@@ -2085,46 +2026,25 @@ object DedupOps {
       // computes grams then df), then overlap the five independent
       // table writes (guide §2.6)
       idx.bigramDf.count()
-      graft.io.Sinks.concurrently(Seq(
-        () => graft.io.Sinks.bucketedTable(idx.grams, s"${prefix}_grams",
-          "bg", buckets, s"$path/grams"),
-        () => graft.io.Sinks.bucketedTable(idx.prefixes,
-          s"${prefix}_prefixes", "bg", buckets, s"$path/prefixes"),
-        () => graft.io.Sinks.bucketedTable(idx.chars, s"${prefix}_chars",
-          "ch", buckets, s"$path/chars"),
-        () => graft.io.Sinks.bucketedTable(idx.tiny, s"${prefix}_tiny",
-          "ln", buckets, s"$path/tiny"),
-        () => graft.io.Sinks.bucketedTable(idx.bigramDf,
-          s"${prefix}_bigramdf", "bg", buckets, s"$path/bigramdf")))
+      IndexLifecycle.write(NameFamily, prefix, path, buckets, Seq(
+        "grams" -> idx.grams, "prefixes" -> idx.prefixes,
+        "chars" -> idx.chars, "tiny" -> idx.tiny,
+        "bigramdf" -> idx.bigramDf))
     } finally idx.cached.foreach(_.unpersist())
 
   def readNameIndex(s: SparkSession, prefix: String): NameIndex =
-    NameIndex(s.table(s"${prefix}_grams"), s.table(s"${prefix}_prefixes"),
-      s.table(s"${prefix}_chars"), s.table(s"${prefix}_tiny"),
-      s.table(s"${prefix}_bigramdf"))
+    nameOf(IndexLifecycle.read(s, NameFamily, prefix))
 
   /** Fold [[purgeGramIndex]] tombstones into the physical tables —
-    * [[vacuumCorpusIndex]]'s staged-swap discipline for the
-    * containment index. Each per-doc table is rewritten from its
-    * masked live view at `newPath` and re-pointed in ONE statement; a
-    * mid-vacuum crash leaves every not-yet-swapped table intact with
-    * the tombstone mask still in force. `gramdf` is untouched (the
+    * each per-doc table is rewritten from its masked live view at
+    * `<newPath>/<suffix>` and re-pointed in ONE statement
+    * ([[graft.io.IndexLifecycle.vacuum]]); `gramdf` is untouched (the
     * frozen order holds no per-doc rows), and the tombstones are
     * dropped last. */
   def vacuumGramIndex(s: SparkSession, prefix: String,
-      newPath: String, buckets: Int = 32): Unit = {
-    val live = readGramIndexLive(s, prefix)
-    def swap(df: DataFrame, suffix: String, key: String): Unit =
-      graft.io.IndexLifecycle.stagedSwap(s, s"${prefix}_$suffix", df,
-        key, buckets, s"$newPath/$suffix")
-    // independent per-table swaps — overlap them (guide §2.6; crash
-    // contract unchanged, see vacuumCorpusIndex)
-    graft.io.Sinks.concurrently(Seq(
-      () => swap(live.ranked, "ranked", "g"),
-      () => swap(live.prefixes, "prefixes", "g"),
-      () => swap(live.docGrams, "docgrams", "doc_id")))
-    s.sql(s"DROP TABLE IF EXISTS ${prefix}_tombstones")
-  }
+      newPath: String, buckets: Int = 32): Unit =
+    IndexLifecycle.vacuum(s, GramFamily, prefix, buckets,
+      sfx => s"$newPath/$sfx")
 
   /** Tombstone a takedown batch of names out of a persisted
     * [[NameIndex]] — [[purgeGramIndex]]'s discipline for the fuzzy
@@ -2134,19 +2054,13 @@ object DedupOps {
     * frequency at all. Insert-only, cost ∝ takedown batch. */
   def purgeNameIndex(s: SparkSession, dead: DataFrame, prefix: String,
       path: String): Unit =
-    graft.io.Sinks.appendBucketedTable(
-      dead.select(col("p_name")).distinct(), s"${prefix}_tombstones",
-      "p_name", 1, s"$path/tombstones")
+    IndexLifecycle.purge(s, NameFamily, prefix, path,
+      dead.select(col("p_name")).distinct())
 
   /** Open a persisted [[NameIndex]] with tombstones applied (broadcast
     * anti-join on every per-name table). */
-  def readNameIndexLive(s: SparkSession, prefix: String): NameIndex = {
-    val idx = readNameIndex(s, prefix)
-    def mask(df: DataFrame) = graft.io.IndexLifecycle.maskTombstones(
-      s, df, s"${prefix}_tombstones", "p_name")
-    NameIndex(mask(idx.grams), mask(idx.prefixes), mask(idx.chars),
-      mask(idx.tiny), idx.bigramDf)
-  }
+  def readNameIndexLive(s: SparkSession, prefix: String): NameIndex =
+    nameOf(IndexLifecycle.readLive(s, NameFamily, prefix))
 
   /** Fold an accepted name batch into a persisted [[NameIndex]]
     * without rebuilding. Same maintenance discipline as
@@ -2162,21 +2076,14 @@ object DedupOps {
   def appendToNameIndex(s: SparkSession, newNames: DataFrame,
       prefix: String, path: String, buckets: Int = 32): Unit = {
     val grams = nameGramRows(newNames).persist()
+    def append(parts: (String, DataFrame)*): Unit = IndexLifecycle.append(
+      s, NameFamily, prefix, path, buckets, None, parts)
     try {
       // first append materializes the gram cache; the remaining three
       // independent appends overlap (guide §2.6)
-      graft.io.Sinks.appendBucketedTable(grams, s"${prefix}_grams",
-        "bg", buckets, s"$path/grams")
-      graft.io.Sinks.concurrently(Seq(
-        () => graft.io.Sinks.appendBucketedTable(
-          namePrefixes(grams, s.table(s"${prefix}_bigramdf")),
-          s"${prefix}_prefixes", "bg", buckets, s"$path/prefixes"),
-        () => graft.io.Sinks.appendBucketedTable(nameCharRows(newNames),
-          s"${prefix}_chars", "ch", buckets, s"$path/chars"),
-        () => graft.io.Sinks.appendBucketedTable(
-          newNames.select(col("p_name"), length(col("p_name")).as("ln"))
-            .filter(col("ln") <= EditCap),
-          s"${prefix}_tiny", "ln", buckets, s"$path/tiny")))
+      append("grams" -> grams)
+      append("prefixes" -> namePrefixes(grams, s.table(s"${prefix}_bigramdf")),
+        "chars" -> nameCharRows(newNames), "tiny" -> tinyNames(newNames))
     } finally grams.unpersist()
   }
 
@@ -2209,8 +2116,7 @@ object DedupOps {
     val grams = nameGramRows(newNames).persist()
     val prefixes = namePrefixes(grams, corpus.bigramDf)
     val chars = nameCharRows(newNames)
-    val tiny = newNames.select(col("p_name"), length(col("p_name")).as("ln"))
-      .filter(col("ln") <= EditCap)
+    val tiny = tinyNames(newNames)
       .withColumn("lnk",
         explode(expr(s"sequence(greatest(ln - $EditCap, 0), ln + $EditCap)")))
     val corpusTinyKeyed = corpus.tiny // bucketed on ln — the probe key
@@ -2232,20 +2138,9 @@ object DedupOps {
     * four per-name tables from their masked live views (staged swaps),
     * keep `bigramdf` frozen, drop the tombstones. */
   def vacuumNameIndex(s: SparkSession, prefix: String,
-      newPath: String, buckets: Int = 32): Unit = {
-    val live = readNameIndexLive(s, prefix)
-    def swap(df: DataFrame, suffix: String, key: String): Unit =
-      graft.io.IndexLifecycle.stagedSwap(s, s"${prefix}_$suffix", df,
-        key, buckets, s"$newPath/$suffix")
-    // independent per-table swaps — overlap them (guide §2.6; crash
-    // contract unchanged, see vacuumCorpusIndex)
-    graft.io.Sinks.concurrently(Seq(
-      () => swap(live.grams, "grams", "bg"),
-      () => swap(live.prefixes, "prefixes", "bg"),
-      () => swap(live.chars, "chars", "ch"),
-      () => swap(live.tiny, "tiny", "ln")))
-    s.sql(s"DROP TABLE IF EXISTS ${prefix}_tombstones")
-  }
+      newPath: String, buckets: Int = 32): Unit =
+    IndexLifecycle.vacuum(s, NameFamily, prefix, buckets,
+      sfx => s"$newPath/$sfx")
 
   /** q257: CONTAINMENT-INDEX PURGE under the bit-exact gate — the
     * right-to-be-forgotten proof for the persisted [[GramIndex]]
@@ -2270,9 +2165,7 @@ object DedupOps {
       val isDead = col("doc_id") % 10 =!= 0 && col("doc_id") % 4 === 1
       val prefix = "gix_q257"
       val path = s"${graft.Tables.scratchDir}/gix_q257"
-      Seq("ranked", "prefixes", "docgrams", "gramdf", "tombstones")
-        .foreach(t => s.sql(s"DROP TABLE IF EXISTS ${prefix}_$t"))
-      graft.io.IndexLifecycle.rmDir(path)
+      IndexLifecycle.resetPrefix(s, prefix, path)
       writeGramIndex(buildGramIndex(docs.filter(!isNew)), prefix, path,
         buckets = 8)
       purgeGramIndex(s, docs.filter(isDead).select(col("doc_id")),
@@ -2330,9 +2223,7 @@ object DedupOps {
         .withColumn("b", bucket).persist()
       val prefix = "nix_q258"
       val path = s"${graft.Tables.scratchDir}/nix_q258"
-      Seq("grams", "prefixes", "chars", "tiny", "bigramdf", "tombstones")
-        .foreach(t => s.sql(s"DROP TABLE IF EXISTS ${prefix}_$t"))
-      graft.io.IndexLifecycle.rmDir(path)
+      IndexLifecycle.resetPrefix(s, prefix, path)
       writeNameIndex(
         buildNameIndex(names.filter(col("b") =!= 0).drop("b")),
         prefix, path, buckets = 8)
@@ -2404,7 +2295,7 @@ object DedupOps {
       val isDead = col("doc_id") % 10 =!= 0 && col("doc_id") % 4 === 1
       val prefix = "gix_q262"
       val path = s"${graft.Tables.scratchDir}/gix_q262"
-      graft.io.IndexLifecycle.resetPrefix(s, prefix, path)
+      IndexLifecycle.resetPrefix(s, prefix, path)
       writeGramIndex(buildGramIndex(docs.filter(!isNew)), prefix,
         s"$path/idx", buckets = 8)
       purgeGramIndex(s, docs.filter(isDead).select(col("doc_id")),
@@ -2426,7 +2317,7 @@ object DedupOps {
         .withColumn("b", bucket).persist()
       val prefix = "nix_q263"
       val path = s"${graft.Tables.scratchDir}/nix_q263"
-      graft.io.IndexLifecycle.resetPrefix(s, prefix, path)
+      IndexLifecycle.resetPrefix(s, prefix, path)
       writeNameIndex(
         buildNameIndex(names.filter(col("b") =!= 0).drop("b")),
         prefix, s"$path/idx", buckets = 8)

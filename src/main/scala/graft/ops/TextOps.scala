@@ -2,6 +2,8 @@ package graft.ops
 
 import graft.{OpSpec, Tables}
 import graft.Tables._
+import graft.io.IndexLifecycle
+import graft.io.IndexLifecycle.{Additive, IndexFamily, IndexTable}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1938,14 +1940,20 @@ object TextOps {
       .select(col("doc_id"), explode(expr(
         s"filter($gramHashSpark, x -> x IS NOT NULL)")).as("g"))
 
+  /** The persisted novelty-index family: ONE signed gram-df table,
+    * additive (appends add counts, [[purgeNoveltyIndex]] appends
+    * negations), no tombstones. Batch-API ingests tag -2, leaving -1 to
+    * the build and the vacuum fold. */
+  private[graft] val NoveltyFamily = IndexFamily(Seq(
+      IndexTable("gramdf", "g", Additive(Seq("g"), "df"), None)),
+    idCol = None, batchTag = Some(-2L), generations = Nil)
+
   def writeNoveltyIndex(docs: DataFrame, prefix: String, path: String,
-      buckets: Int = 8): Unit = {
-    val g = gramRowsInline(docs)
-      .groupBy(col("g")).agg(count(lit(1)).as("df"))
-      .withColumn("ingest_batch", lit(-1L))
-    graft.io.Sinks.bucketedTable(g.repartition(buckets, col("g")),
-      s"${prefix}_gramdf", "g", buckets, s"$path/gramdf")
-  }
+      buckets: Int = 8): Unit =
+    IndexLifecycle.write(NoveltyFamily, prefix, path, buckets, Seq(
+      "gramdf" -> gramRowsInline(docs)
+        .groupBy(col("g")).agg(count(lit(1)).as("df"))
+        .repartition(buckets, col("g"))))
 
   /** Score one arriving batch against the persisted novelty index and
     * fold the batch in — q282's per-doc novelty with cost ∝ batch
@@ -2011,19 +2019,11 @@ object TextOps {
     // seal the verdicts, THEN append — a lazily-evaluated report would
     // otherwise see the batch's own grams in the index and zero itself
     val out = report.localCheckpoint()
-    val rows = bdf.select(col("g"), col("df"))
     // location resolved from the catalog (the table must exist);
     // streaming callers get the replay-skip/heal append keyed on their
     // micro-batch id
-    batchId match {
-      case Some(id) =>
-        graft.io.Sinks.appendBucketedTableIdempotent(s, rows, id,
-          s"${prefix}_gramdf", "g", buckets, ""); ()
-      case None =>
-        graft.io.Sinks.appendBucketedTable(
-          rows.withColumn("ingest_batch", lit(-2L)),
-          s"${prefix}_gramdf", "g", buckets, "")
-    }
+    IndexLifecycle.append(s, NoveltyFamily, prefix, "", buckets, batchId,
+      Seq("gramdf" -> bdf.select(col("g"), col("df"))))
     // both consumers of the cached batch grams have run (verdicts
     // checkpointed, gram rows appended) — release the executor blocks
     // NOW instead of leaning on GC-driven ContextCleaner, which in
@@ -2070,29 +2070,23 @@ object TextOps {
     val neg = gramRowsInline(docs)
       .groupBy(col("g"))
       .agg((count(lit(1)) * lit(-1L)).as("df"))
-    graft.io.Sinks.appendBucketedTableIdempotent(s, neg,
-      noveltyTakedownTag(takedownId), s"${prefix}_gramdf", "g",
-      buckets, "") // location resolved from the catalog
-    ()
+    IndexLifecycle.append(s, NoveltyFamily, prefix, "", buckets,
+      Some(noveltyTakedownTag(takedownId)), Seq("gramdf" -> neg))
   }
 
   /** Fold the novelty index's appended generations and purge negations
-    * into one physical row per surviving gram (signed sum > 0), via
-    * the staged-swap discipline (write staging at the new path, ONE
-    * SET LOCATION re-point, drop staging) — readers never see an
-    * unregistered instant, and the reclaimed rows are invisible to
-    * scoring by construction since scoring already sums. Re-tags
-    * everything -1, so it must run with any feeding stream stopped at
-    * a committed offset (the maintenance contract every compaction in
-    * this engine shares). */
+    * into one physical row per surviving gram (signed sum > 0 — the
+    * live view of the additive gram-df table), via the staged-swap
+    * discipline (write staging at `newPath`, ONE SET LOCATION
+    * re-point, drop staging) — readers never see an unregistered
+    * instant, and the reclaimed rows are invisible to scoring by
+    * construction since scoring already sums. Re-tags everything -1,
+    * so it must run with any feeding stream stopped at a committed
+    * offset (the maintenance contract every compaction in this engine
+    * shares). */
   def vacuumNoveltyIndex(s: SparkSession, prefix: String,
       newPath: String, buckets: Int = 8): Unit =
-    graft.io.IndexLifecycle.stagedSwap(s, s"${prefix}_gramdf",
-      s.table(s"${prefix}_gramdf")
-        .groupBy(col("g")).agg(sum(col("df")).as("df"))
-        .filter(col("df") > 0L)
-        .withColumn("ingest_batch", lit(-1L)),
-      "g", buckets, newPath)
+    IndexLifecycle.vacuum(s, NoveltyFamily, prefix, buckets, _ => newPath)
 
   /** q285: NOVELTY-INDEX PURGE under the bit-exact gate — the
     * takedown quarter of the corpus (% 4 = 1 among non-batch docs) is
@@ -2110,8 +2104,7 @@ object TextOps {
       val isDead = col("doc_id") % 10 =!= 0 && col("doc_id") % 4 === 1
       val prefix = "nvx_q285"
       val path = s"${graft.Tables.scratchDir}/nvx_q285"
-      s.sql(s"DROP TABLE IF EXISTS ${prefix}_gramdf")
-      graft.io.IndexLifecycle.rmDir(path)
+      IndexLifecycle.resetPrefix(s, prefix, path)
       writeNoveltyIndex(docs.filter(!isNew), prefix, path)
       purgeNoveltyIndex(s, docs.filter(isDead), prefix, takedownId = 0L)
       ingestNovelty(s, docs.filter(isNew), prefix)
@@ -2158,9 +2151,7 @@ object TextOps {
       val isDead = col("doc_id") % 10 =!= 0 && col("doc_id") % 4 === 1
       val prefix = "nvx_q286"
       val path = s"${graft.Tables.scratchDir}/nvx_q286"
-      Seq("gramdf", "gramdf__vacuum")
-        .foreach(t => s.sql(s"DROP TABLE IF EXISTS ${prefix}_$t"))
-      graft.io.IndexLifecycle.rmDir(path)
+      IndexLifecycle.resetPrefix(s, prefix, path)
       writeNoveltyIndex(docs.filter(!isNew), prefix, s"$path/idx")
       purgeNoveltyIndex(s, docs.filter(isDead), prefix, takedownId = 0L)
       vacuumNoveltyIndex(s, prefix, s"$path/vac")
@@ -2184,8 +2175,7 @@ object TextOps {
       val isNew = col("doc_id") % 10 === 0
       val prefix = "nvx_q283"
       val path = s"${graft.Tables.scratchDir}/nvx_q283"
-      s.sql(s"DROP TABLE IF EXISTS ${prefix}_gramdf")
-      graft.io.IndexLifecycle.rmDir(path)
+      IndexLifecycle.resetPrefix(s, prefix, path)
       writeNoveltyIndex(docs.filter(!isNew), prefix, path)
       ingestNovelty(s, docs.filter(isNew), prefix)
     },

@@ -1,5 +1,7 @@
 package graft.streaming
 
+import graft.io.IndexLifecycle
+import graft.ops.{DedupOps, SemanticDedupOps, TextOps, VectorIndexOps}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -908,7 +910,6 @@ object StreamingStages {
         7213e-4 / (1e0 + 1079e-3 / 64e0) * 64e0 * 64e0 / z.z AS est
       FROM r JOIN z ON z.win_start = r.win_start"""))
 
-  /** The oracle-checked streaming ops (SparkEntry registry hook). */
   /** foreachBatch ingest into a persisted
     * [[graft.ops.VectorIndexOps.VectorIndex]]: each arriving micro-batch
     * of (vec_id, embedding) rows is coded against the FROZEN stored
@@ -927,25 +928,12 @@ object StreamingStages {
     * input is processed; the caller stops (or keeps) the query. */
   def streamIntoVectorIndex(s: SparkSession, vecs: DataFrame,
       prefix: String, path: String,
-      checkpointDir: String): StreamingQuery = {
-    val q = vecs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          graft.ops.VectorIndexOps.appendToVectorIndex(s, batch, prefix,
-            path, batchId = Some(batchId))
-          // the append's write runs through the micro-batch's CLONED
-          // session, which invalidates only its own relation cache —
-          // the serving session would keep the stale (pre-append) file
-          // listing for the codes table without this metadata-only
-          // refresh
-          s.catalog.refreshTable(s"${prefix}_codes")
-        }
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
-    q.processAllAvailable()
-    q
-  }
+      checkpointDir: String): StreamingQuery =
+    IndexLifecycle.streamIngest(s, vecs, checkpointDir,
+      VectorIndexOps.VectorFamily.appended(prefix)) { (batch, batchId) =>
+      VectorIndexOps.appendToVectorIndex(s, batch, prefix, path,
+        batchId = Some(batchId))
+    }
 
   /** q219: the stream-built index under the bit-exact gate. Codebooks
     * are trained once (batch, frozen); the corpus arrives as a FILE
@@ -962,17 +950,14 @@ object StreamingStages {
         .select(col("vec_id"), col("embedding"))
       val base = s"${graft.Tables.scratchDir}/vsi_q219"
       val prefix = "vsi_q219"
-      graft.ops.VectorIndexOps.resetVectorIndex(s, prefix, base)
+      IndexLifecycle.resetPrefix(s, prefix, base)
       val (streamDir, idxPath, ckpt) =
         (s"$base/stream", s"$base/idx", s"$base/ckpt")
       // train on the full corpus, start with ZERO codes — ingest is
       // the stream's job
       graft.ops.VectorIndexOps.buildVectorIndex(s, e, e.limit(0), prefix, idxPath)
       e.repartition(4, col("vec_id")).write.parquet(streamDir)
-      val stream = s.readStream
-        .schema(s.read.parquet(streamDir).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(streamDir)
+      val stream = fileStream(s, streamDir)
       streamIntoVectorIndex(s, stream, prefix, idxPath, ckpt).stop()
       graft.ops.VectorIndexOps.searchVectorIndex(
         graft.Tables.table(s, dir, "embeddings")
@@ -996,22 +981,11 @@ object StreamingStages {
   def streamIntoRollup(s: SparkSession, rows: DataFrame,
       keys: Seq[String], measures: Seq[String], tableName: String,
       buckets: Int, path: String,
-      checkpointDir: String): StreamingQuery = {
-    val q = rows.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          graft.io.Sinks.appendRollup(batch, keys, measures, tableName,
-            buckets, path, batchId = Some(batchId))
-          // micro-batch writes run in a cloned session — refresh the
-          // serving session's relation cache (the q219 lesson)
-          s.catalog.refreshTable(tableName)
-        }
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
-    q.processAllAvailable()
-    q
-  }
+      checkpointDir: String): StreamingQuery =
+    IndexLifecycle.streamIngest(s, rows, checkpointDir, Seq(tableName)) {
+      (batch, batchId) => graft.io.Sinks.appendRollup(batch, keys,
+        measures, tableName, buckets, path, batchId = Some(batchId))
+    }
 
   /** q228: the stream-maintained rollup under the bit-exact gate. The
     * events table arrives as a four-file stream; each micro-batch
@@ -1029,10 +1003,7 @@ object StreamingStages {
       graft.Tables.table(s, dir, "events")
         .repartition(4, col("event_id"))
         .write.parquet(s"$base/stream")
-      val stream = s.readStream
-        .schema(s.read.parquet(s"$base/stream").schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(s"$base/stream")
+      val stream = fileStream(s, s"$base/stream")
       streamIntoRollup(s, stream, Seq("event_type"), Seq("value"),
         tableName, 4, s"$base/tbl", s"$base/ckpt").stop()
       graft.io.Sinks.readRollup(s, tableName, Seq("event_type"),
@@ -1071,10 +1042,7 @@ object StreamingStages {
         .select(col("doc_id"), col("lang"), col("n_chars"))
         .repartition(4, col("doc_id"))
         .write.parquet(s"$base/stream")
-      val stream = s.readStream
-        .schema(s.read.parquet(s"$base/stream").schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(s"$base/stream")
+      val stream = fileStream(s, s"$base/stream")
       streamIntoRollup(s, stream, Seq("lang"), Seq("n_chars"),
         tableName, 4, s"$base/tbl", s"$base/ckpt").stop()
       val c = graft.io.Sinks.readRollup(s, tableName, Seq("lang"),
@@ -1112,26 +1080,12 @@ object StreamingStages {
     * contract). */
   def streamIntoCorpusIndex(s: SparkSession, docs: DataFrame,
       prefix: String, path: String, buckets: Int,
-      checkpointDir: String): StreamingQuery = {
-    val tables = Seq("hashes", "shingles", "bands", "sizes",
-      "bandcounts")
-    val q = docs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          graft.ops.DedupOps.appendToCorpusIndex(batch, prefix, path,
-            buckets, batchId = Some(batchId))
-          // cloned-session writes only invalidate their own relation
-          // cache (the q219 lesson) — refresh the serving session's
-          tables.foreach(t =>
-            if (s.catalog.tableExists(s"${prefix}_$t"))
-              s.catalog.refreshTable(s"${prefix}_$t"))
-        }
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
-    q.processAllAvailable()
-    q
-  }
+      checkpointDir: String): StreamingQuery =
+    IndexLifecycle.streamIngest(s, docs, checkpointDir,
+      DedupOps.CorpusFamily.appended(prefix)) { (batch, batchId) =>
+      DedupOps.appendToCorpusIndex(batch, prefix, path, buckets,
+        batchId = Some(batchId))
+    }
 
   /** q230: ingest dedup served from a STREAM-BUILT corpus index. The
     * corpus side (doc_id % 10 <> 0) arrives as a four-file stream and
@@ -1144,18 +1098,12 @@ object StreamingStages {
     (s, dir) => {
       val prefix = "sci_q230"
       val base = s"${graft.Tables.scratchDir}/sci_q230"
-      Seq("hashes", "shingles", "bands", "sizes", "bandcounts",
-        "tombstones").foreach(t =>
-        s.sql(s"DROP TABLE IF EXISTS ${prefix}_$t"))
-      graft.io.IndexLifecycle.rmDir(base)
+      IndexLifecycle.resetPrefix(s, prefix, base)
       val docs = graft.Tables.table(s, dir, "documents")
       docs.filter(col("doc_id") % 10 =!= 0)
         .repartition(4, col("doc_id"))
         .write.parquet(s"$base/stream")
-      val stream = s.readStream
-        .schema(s.read.parquet(s"$base/stream").schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(s"$base/stream")
+      val stream = fileStream(s, s"$base/stream")
       streamIntoCorpusIndex(s, stream, prefix, s"$base/idx", 8,
         s"$base/ckpt").stop()
       graft.ops.DedupOps.incrementalDedup(
@@ -1178,37 +1126,38 @@ object StreamingStages {
     * shard convention, README.md:66-89). */
   def streamIntoSemanticIndex(s: SparkSession, docs: DataFrame,
       prefix: String, path: String, buckets: Int,
-      checkpointDir: String, nprobe: Int = 1): StreamingQuery = {
-    val q = docs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val verdicts = graft.ops.SemanticDedupOps.ingestSemanticIndex(
-            s, batch, prefix, path, buckets, batchId = Some(batchId),
-            nprobe = nprobe)
-          graft.io.Sinks.appendBucketedTableIdempotent(s, verdicts,
-            batchId, s"${prefix}_verdicts", "vec_id", buckets,
-            s"$path/verdicts")
-          // cloned-session writes only invalidate their own relation
-          // cache (the q219 lesson)
-          Seq("members", "verdicts").foreach(t =>
-            if (s.catalog.tableExists(s"${prefix}_$t"))
-              s.catalog.refreshTable(s"${prefix}_$t"))
-        }
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
-    q.processAllAvailable()
-    q
+      checkpointDir: String, nprobe: Int = 1): StreamingQuery =
+    IndexLifecycle.streamIngest(s, docs, checkpointDir,
+      SemanticDedupOps.SemanticFamily.appended(prefix) :+
+        s"${prefix}_verdicts") { (batch, batchId) =>
+      val verdicts = SemanticDedupOps.ingestSemanticIndex(s, batch, prefix,
+        path, buckets, batchId = Some(batchId), nprobe = nprobe)
+      graft.io.Sinks.appendBucketedTableIdempotent(s, verdicts, batchId,
+        s"${prefix}_verdicts", "vec_id", buckets, s"$path/verdicts")
+    }
+
+  /** A stream over the parquet files in `dir`, one file per
+    * micro-batch, its schema taken from a static read of the same
+    * files. */
+  private def fileStream(s: SparkSession, dir: String): DataFrame =
+    s.readStream.schema(s.read.parquet(dir).schema)
+      .option("maxFilesPerTrigger", 1).parquet(dir)
+
+  /** Write `df` as the ONE parquet file `dst` with modification time
+    * `mtime`: a file stream delivers staged files in mtime order — the
+    * arrival-order contract the incremental ingests need. */
+  private def stageFile(df: DataFrame, dst: String, mtime: Long): Unit = {
+    val tmp = java.nio.file.Files.createTempDirectory("stage")
+    df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+    val ls = java.nio.file.Files.list(tmp)
+    val part = try ls.toArray.map(_.toString)
+      .filter(_.endsWith(".parquet")).head finally ls.close()
+    val to = java.nio.file.Paths.get(dst)
+    java.nio.file.Files.createDirectories(to.getParent)
+    java.nio.file.Files.copy(java.nio.file.Paths.get(part), to)
+    to.toFile.setLastModified(mtime); ()
   }
 
-  /** q247: incremental SemDeDup fed by a STREAM — q242's trajectory
-    * with the two post-base generations arriving as a file stream in
-    * mtime (= vec_id) order, one micro-batch each. The base builds the
-    * index (batch); the stream pays only per-batch ingest; the unioned
-    * verdicts (base + streamed, read back from the verdict table) must
-    * equal the scratch frozen-centroid SemDeDup — q242's oracle
-    * verbatim. This gives the semantic index the same streaming half
-    * the vector index (q219) and the n-gram corpus index (q230) have. */
   /** The q247/q288 trajectory body, parameterized by the probe
     * fan-out: base half builds the index (batch), the two later
     * generations arrive as an mtime-ordered file stream (one
@@ -1217,7 +1166,7 @@ object StreamingStages {
   private def semdedupStreamTrajectory(s: SparkSession, dir: String,
       prefix: String, nprobe: Int): DataFrame = {
     val base = s"${graft.Tables.scratchDir}/$prefix"
-    graft.ops.SemanticDedupOps.resetSemanticIndex(s, prefix, base)
+    IndexLifecycle.resetPrefix(s, prefix, base)
     val e = graft.Tables.table(s, dir, "embeddings")
       .select(col("vec_id"), col("embedding"),
         expr("""CASE WHEN aggregate(embedding, 0e0,
@@ -1230,33 +1179,25 @@ object StreamingStages {
       nprobe = nprobe)
     // stage the two generations as files whose MTIME order is their
     // id order — the arrival-order contract the ingest needs
-    val streamDir = java.nio.file.Paths.get(s"$base/stream")
-    java.nio.file.Files.createDirectories(streamDir)
-    def stage(df: org.apache.spark.sql.DataFrame, name: String,
-        mtime: Long): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("semstage")
-      df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      val ls = java.nio.file.Files.list(tmp)
-      val part = try ls.toArray.map(_.toString)
-        .filter(_.endsWith(".parquet")).head finally ls.close()
-      val dst = streamDir.resolve(name)
-      java.nio.file.Files.copy(java.nio.file.Paths.get(part), dst)
-      dst.toFile.setLastModified(mtime); ()
-    }
-    stage(e.filter(col("vec_id") * 2 >= total &&
-      col("vec_id") * 4 < total * 3), "00_g1.parquet", 100000L)
-    stage(e.filter(col("vec_id") * 4 >= total * 3), "01_g2.parquet",
-      200000L)
-    val stream = s.readStream
-      .schema(s.read.parquet(s"$base/stream").schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(s"$base/stream")
+    stageFile(e.filter(col("vec_id") * 2 >= total &&
+      col("vec_id") * 4 < total * 3), s"$base/stream/00_g1.parquet", 100000L)
+    stageFile(e.filter(col("vec_id") * 4 >= total * 3),
+      s"$base/stream/01_g2.parquet", 200000L)
+    val stream = fileStream(s, s"$base/stream")
     streamIntoSemanticIndex(s, stream, prefix, s"$base/idx",
       8, s"$base/ckpt", nprobe = nprobe).stop()
     v0.unionByName(s.table(s"${prefix}_verdicts")
       .select(col("cid"), col("vec_id"), col("verdict")))
   }
 
+  /** q247: incremental SemDeDup fed by a STREAM — q242's trajectory
+    * with the two post-base generations arriving as a file stream in
+    * mtime (= vec_id) order, one micro-batch each. The base builds the
+    * index (batch); the stream pays only per-batch ingest; the unioned
+    * verdicts (base + streamed, read back from the verdict table) must
+    * equal the scratch frozen-centroid SemDeDup — q242's oracle
+    * verbatim. This gives the semantic index the same streaming half
+    * the vector index (q219) and the n-gram corpus index (q230) have. */
   val q247StreamingSemdedup: graft.OpSpec = graft.OpSpec(
     "q247_streaming_semdedup",
     (s, dir) => semdedupStreamTrajectory(s, dir, "sem_q247", 1),
@@ -1294,20 +1235,9 @@ object StreamingStages {
       val base = s"${graft.Tables.scratchDir}/shard_q259"
       graft.io.IndexLifecycle.rmDir(base)
       val ev = graft.Tables.table(s, dir, "events")
-      val streamDir = java.nio.file.Paths.get(s"$base/stream")
-      java.nio.file.Files.createDirectories(streamDir)
       def stage(p: org.apache.spark.sql.Column, name: String,
-          mtime: Long): Unit = {
-        val tmp = java.nio.file.Files.createTempDirectory("shardstage")
-        ev.filter(p).coalesce(1).write.mode("overwrite")
-          .parquet(tmp.toString)
-        val ls = java.nio.file.Files.list(tmp)
-        val part = try ls.toArray.map(_.toString)
-          .filter(_.endsWith(".parquet")).head finally ls.close()
-        val dst = streamDir.resolve(name)
-        java.nio.file.Files.copy(java.nio.file.Paths.get(part), dst)
-        dst.toFile.setLastModified(mtime); ()
-      }
+          mtime: Long): Unit =
+        stageFile(ev.filter(p), s"$base/stream/$name", mtime)
       def run(): Unit = runToShardedParquet(
         s.readStream.schema(ev.schema).option("maxFilesPerTrigger", 1)
           .parquet(s"$base/stream"),
@@ -1365,25 +1295,16 @@ object StreamingStages {
     * not the crashed attempt's append survived. */
   def streamIntoNoveltyIndex(s: SparkSession, docs: DataFrame,
       prefix: String, buckets: Int,
-      checkpointDir: String): StreamingQuery = {
-    val q = docs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val report = graft.ops.TextOps.ingestNovelty(
-            s, batch, prefix, buckets, batchId = Some(batchId))
-          graft.io.Sinks.appendBucketedTableIdempotent(s, report,
-            batchId, s"${prefix}_verdicts", "doc_id", buckets,
-            s"${graft.Tables.scratchDir}/${prefix}_verdicts")
-          Seq("gramdf", "verdicts").foreach(t =>
-            if (s.catalog.tableExists(s"${prefix}_$t"))
-              s.catalog.refreshTable(s"${prefix}_$t"))
-        }
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
-    q.processAllAvailable()
-    q
-  }
+      checkpointDir: String): StreamingQuery =
+    IndexLifecycle.streamIngest(s, docs, checkpointDir,
+      TextOps.NoveltyFamily.appended(prefix) :+ s"${prefix}_verdicts") {
+      (batch, batchId) =>
+        val report = TextOps.ingestNovelty(s, batch, prefix, buckets,
+          batchId = Some(batchId))
+        graft.io.Sinks.appendBucketedTableIdempotent(s, report, batchId,
+          s"${prefix}_verdicts", "doc_id", buckets,
+          s"${graft.Tables.scratchDir}/${prefix}_verdicts")
+    }
 
   /** q284: incremental novelty fed by a STREAM — q283's trajectory
     * with the batch docs arriving as TWO mtime-ordered generations
@@ -1401,37 +1322,18 @@ object StreamingStages {
   val q284StreamingNovelty: graft.OpSpec = graft.OpSpec(
     "q284_streaming_novelty",
     (s, dir) => {
-      import graft.ops.TextOps
       val prefix = "nvx_q284"
       val base = s"${graft.Tables.scratchDir}/nvx_q284"
-      Seq("gramdf", "verdicts")
-        .foreach(t => s.sql(s"DROP TABLE IF EXISTS ${prefix}_$t"))
-      graft.io.IndexLifecycle.rmDir(base)
+      IndexLifecycle.resetPrefix(s, prefix, base)
       val docs = graft.Tables.table(s, dir, "documents")
         .select(col("doc_id"), col("text"))
       TextOps.writeNoveltyIndex(docs.filter(col("doc_id") % 10 =!= 0),
         prefix, s"$base/idx")
-      val streamDir = java.nio.file.Paths.get(s"$base/stream")
-      java.nio.file.Files.createDirectories(streamDir)
-      def stage(df: org.apache.spark.sql.DataFrame, name: String,
-          mtime: Long): Unit = {
-        val tmp = java.nio.file.Files.createTempDirectory("nvstage")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val ls = java.nio.file.Files.list(tmp)
-        val part = try ls.toArray.map(_.toString)
-          .filter(_.endsWith(".parquet")).head finally ls.close()
-        val dst = streamDir.resolve(name)
-        java.nio.file.Files.copy(java.nio.file.Paths.get(part), dst)
-        dst.toFile.setLastModified(mtime); ()
-      }
-      stage(docs.filter(col("doc_id") % 20 === 0), "00_g1.parquet",
-        100000L)
-      stage(docs.filter(col("doc_id") % 20 === 10), "01_g2.parquet",
-        200000L)
-      val stream = s.readStream
-        .schema(s.read.parquet(s"$base/stream").schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(s"$base/stream")
+      stageFile(docs.filter(col("doc_id") % 20 === 0),
+        s"$base/stream/00_g1.parquet", 100000L)
+      stageFile(docs.filter(col("doc_id") % 20 === 10),
+        s"$base/stream/01_g2.parquet", 200000L)
+      val stream = fileStream(s, s"$base/stream")
       streamIntoNoveltyIndex(s, stream, prefix, 8, s"$base/ckpt").stop()
       s.table(s"${prefix}_verdicts")
         .select(col("doc_id"), col("n_grams"), col("n_novel"),

@@ -1096,6 +1096,47 @@ class OperatorSpec extends AnyFunSuite {
         .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
       spark.catalog.clearCache()
     }
+    // the name index, the second input: vacuum == build from the
+    // survivors table-for-table, the tombstones retire, and the frozen
+    // bigramdf stays exactly as built (files and rows). The purged
+    // names share no bigram with the survivors, so the frozen rarity
+    // order ranks the survivors' prefixes as a survivor build does,
+    // while the purged names' bigrams keep their frozen df rows.
+    val pxN = "ut_vnx"
+    val names = Seq("kilometer", "kilometre", "lima", "ab", "noodle",
+      "xyzzyq", "qw")
+    val dead = Seq("xyzzyq", "qw")
+    def rows(t: String) = spark.table(t).collect().map(_.toSeq).toSet
+    try {
+      DedupOps.writeNameIndex(DedupOps.buildNameIndex(names.toDF("p_name")),
+        pxN, s"$base/nidx", buckets = 2)
+      val dfRows = rows(s"${pxN}_bigramdf")
+      val dfLoc = graft.io.Sinks.tableLocation(spark, s"${pxN}_bigramdf")
+      DedupOps.purgeNameIndex(spark, dead.toDF("p_name"), pxN,
+        s"$base/nidx")
+      DedupOps.vacuumNameIndex(spark, pxN, s"$base/nvac", buckets = 2)
+      assert(!spark.catalog.tableExists(s"${pxN}_tombstones"),
+        "name vacuum left the folded tombstones behind")
+      DedupOps.writeNameIndex(DedupOps.buildNameIndex(
+        names.filterNot(dead.contains).toDF("p_name")),
+        s"${pxN}_surv", s"$base/nsurv", buckets = 2)
+      Seq("grams", "prefixes", "chars", "tiny").foreach { t =>
+        assert(graft.io.Sinks.tableLocation(spark, s"${pxN}_$t")
+          .startsWith(s"$base/nvac"), s"name vacuum did not rewrite $t")
+        assert(rows(s"${pxN}_$t") == rows(s"${pxN}_surv_$t"),
+          s"vacuumed $t differs from the survivor build")
+      }
+      assert(graft.io.Sinks.tableLocation(spark, s"${pxN}_bigramdf") ==
+        dfLoc && rows(s"${pxN}_bigramdf") == dfRows,
+        "name vacuum rewrote the frozen bigramdf")
+      assert(dfRows != rows(s"${pxN}_surv_bigramdf"),
+        "fixture: the purged names must own bigrams of their own")
+    } finally {
+      spark.sessionState.catalog.listTables("default").map(_.table)
+        .filter(_.startsWith(pxN))
+        .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+      spark.catalog.clearCache()
+    }
   }
 
   test("incremental containment joins the persisted gram index, no corpus rescan") {

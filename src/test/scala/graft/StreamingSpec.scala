@@ -780,6 +780,25 @@ class StreamingSpec extends AnyFunSuite {
     }
   }
 
+  test("fused multi-table append rejects a table named twice, before " +
+    "any probe or write") {
+    import spark.implicits._
+    val base = java.nio.file.Files.createTempDirectory("dupn").toString
+    val t = "ut_dupname" + base.replaceAll("[^A-Za-z0-9]", "").takeRight(8)
+    val rows = Seq((1L, "a"), (2L, "b")).toDF("k", "v")
+    try {
+      val err = intercept[IllegalArgumentException](
+        graft.io.Sinks.appendBucketedTablesIdempotent(spark, 3L, Seq(
+          (rows, t, "k", 2, s"$base/a"), (rows, t, "k", 2, s"$base/b"))))
+      assert(err.getMessage.contains(t), err.getMessage)
+      assert(!spark.catalog.tableExists(t),
+        "a rejected append still created its table")
+      assert(!new java.io.File(s"$base/a").exists &&
+        !new java.io.File(s"$base/b").exists,
+        "a rejected append still wrote files")
+    } finally spark.sql(s"DROP TABLE IF EXISTS $t")
+  }
+
   test("sharded-parquet sink: torn uncommitted output is invisible to the " +
     "readback and a restart replays the batch exactly once") {
     import org.apache.spark.sql.functions._
